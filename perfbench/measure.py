@@ -84,6 +84,12 @@ def tree_cpu_s() -> float:
     return total / CLK_TCK
 
 
+def host_steal_s() -> float:
+    """CPU time the hypervisor took from this VM, summed over its CPUs."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / CLK_TCK
+
+
 def tree_pss_mb() -> float:
     kb = 0
     for p in process_tree():

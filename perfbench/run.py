@@ -125,11 +125,10 @@ def shutdown(spark) -> None:
 def end_to_end(w, setups: list[float], peak_pss_mb: float) -> dict[str, float]:
     from measure import median
 
+    ops = w.measured()
     return {
-        "rows_per_s": median([r / (ms / 1e3) for r, ms in zip(w.op_rows, w.op_ms)]),
-        "cpu_us_per_row": median(
-            [c / r * 1e6 for c, r in zip(w.op_cpu_s, w.op_rows)]
-        ),
+        "rows_per_s": median([w.op_rows[i] / (w.op_ms[i] / 1e3) for i in ops]),
+        "cpu_us_per_row": median([w.op_cpu_s[i] / w.op_rows[i] * 1e6 for i in ops]),
         "peak_pss_mb": peak_pss_mb,
         "setup_s": median(setups),
     }
@@ -225,6 +224,8 @@ def main(argv=None) -> int:
             "op_ms": w.op_ms,
             "setups_s": setups,
             "control.host_ops_per_s": [control_before, control_after],
+            "op_steal": w.op_steal,
+            "ops_measured": len(w.measured()),
             **controls,
             "e2e": e2e,
             "phases": phases,

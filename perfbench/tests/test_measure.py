@@ -70,3 +70,29 @@ def test_spans_reraise_and_still_record():
         with spans.span("boom"):
             raise ValueError("x")
     assert [r["name"] for r in spans.records] == ["boom"]
+
+
+def test_window_leaves_out_high_steal_ops():
+    from workloads import STEAL_MAX, WINDOW_CAP, Window
+
+    w = Window()
+    for steal in (0.0, STEAL_MAX * 3, 0.01):
+        w.add(2.0, 1.0, 100, True, False, steal)
+    assert w.measured() == [0, 2]
+    assert w.more(4.5)  # 4 s of clean ops so far
+    assert not w.more(4.0)
+    # a window of nothing but high-steal ops measures them all, and ends
+    # at the cap
+    w = Window()
+    for _ in range(3):
+        w.add(2.0, 1.0, 100, True, False, STEAL_MAX * 2)
+    assert w.measured() == [0, 1, 2]
+    assert w.more(6.0 / WINDOW_CAP + 0.1)
+    assert not w.more(6.0 / WINDOW_CAP)
+
+
+def test_host_steal_is_a_counter():
+    from measure import host_steal_s
+
+    a = host_steal_s()
+    assert 0.0 <= a <= host_steal_s()

@@ -23,21 +23,29 @@ import pyarrow.parquet as pq
 
 import inputs
 import reference as ref
-from measure import tree_cpu_s
+from measure import host_steal_s, tree_cpu_s
 from sparkstats import PHASE_PROP
 
 
-PRIME_OPS = 2  # untimed full ops before the window (see README: drift)
+PRIME_OPS = 3  # untimed full ops before the window (see README: drift)
+
+# An op during which the hypervisor took more than this share of the
+# VM's CPU time (steal, from /proc/stat) is not measured: on a shared host
+# such bursts slow a 4-core pass by up to 40% for minutes at a time while
+# a one-thread control barely moves (see README).
+STEAL_MAX = 0.05
+WINDOW_CAP = 2.0  # ...but the window ends at this many times --seconds
 
 
 @dataclass
 class Window:
-    """Per-op wall (ms), process-tree CPU (s) and input rows; checks are
-    outside the timed part."""
+    """Per-op wall (ms), process-tree CPU (s), input rows and steal share;
+    checks are outside the timed part."""
 
     op_ms: list[float] = field(default_factory=list)
     op_cpu_s: list[float] = field(default_factory=list)
     op_rows: list[int] = field(default_factory=list)
+    op_steal: list[float] = field(default_factory=list)
     failed: int = 0
     traced_ms: list[float] = field(default_factory=list)  # ops run with spans on
     untraced_ms: list[float] = field(default_factory=list)
@@ -46,19 +54,35 @@ class Window:
     def attempted(self) -> int:
         return len(self.op_ms)
 
+    def clean(self) -> list[int]:
+        return [i for i, s in enumerate(self.op_steal) if s <= STEAL_MAX]
+
+    def measured(self) -> list[int]:
+        """Indices of the ops the metrics use: those within ``STEAL_MAX``,
+        or every op when none is."""
+        return self.clean() or list(range(self.attempted))
+
     def more(self, seconds: float) -> bool:
-        """Another op is due: under ``seconds`` of measured time, or
-        fewer than two ops (one traced and one untraced when tracing)."""
-        return self.wall_s < seconds or self.attempted < 2
+        """Another op is due: under ``seconds`` of measured time (and
+        under ``WINDOW_CAP`` times that in all), or fewer than two ops
+        (one traced and one untraced when tracing)."""
+        if self.attempted < 2:
+            return True
+        clean_s = sum(self.op_ms[i] for i in self.clean()) / 1e3
+        return clean_s < seconds and self.wall_s < WINDOW_CAP * seconds
 
     @property
     def wall_s(self) -> float:
         return sum(self.op_ms) / 1e3
 
-    def add(self, wall_s: float, cpu_s: float, rows: int, ok: bool, traced: bool):
+    def add(
+        self, wall_s: float, cpu_s: float, rows: int, ok: bool, traced: bool,
+        steal: float = 0.0,
+    ):
         self.op_ms.append(wall_s * 1e3)
         self.op_cpu_s.append(cpu_s)
         self.op_rows.append(rows)
+        self.op_steal.append(steal)
         self.failed += not ok
         (self.traced_ms if traced else self.untraced_ms).append(wall_s * 1e3)
 
@@ -88,24 +112,31 @@ class Workload:
         """The small operation every set-up ends with."""
         raise NotImplementedError
 
-    def op(self, spark) -> tuple[float, float, int, bool]:
-        """One full operation: (wall_s, cpu_s, input rows, output correct)."""
+    def op(self, spark, check: bool = True) -> tuple[float, float, int, bool]:
+        """One full operation: (wall_s, cpu_s, input rows, output correct);
+        ``check=False`` skips the reference check (prime ops)."""
         raise NotImplementedError
 
     def prime(self, spark) -> None:
         for _ in range(PRIME_OPS):
-            self.op(spark)
+            self.op(spark, check=False)
 
     def window(self, spark, seconds: float, spans) -> Window:
         """Ops back to back for ``seconds`` of measured time; with spans,
-        every second op is traced."""
+        every second op is traced. An op's steal share covers the op and
+        its check."""
         w = Window()
         while w.more(seconds):
             traced = spans is not None and w.attempted % 2 == 1
             if spans is not None:
                 spans.enabled = traced
+            steal0, t0 = host_steal_s(), time.perf_counter()
             with spans.span(f"{self.name}.op") if traced else nullcontext():
-                w.add(*self.op(spark), traced)
+                res = self.op(spark)
+            steal = (host_steal_s() - steal0) / (
+                (time.perf_counter() - t0) * os.cpu_count()
+            )
+            w.add(*res, traced, steal)
         if spans is not None:
             spans.enabled = False
         return w
@@ -140,7 +171,7 @@ class Spine(Workload):
         self.files = inputs.transcript_files(self.dir)
         self.ref = ref.spine_reference(self.dir, self.files)
 
-    def op(self, spark) -> tuple[float, float, int, bool]:
+    def op(self, spark, check: bool = True) -> tuple[float, float, int, bool]:
         from skewer_spark.pipeline import Pipeline
 
         df = spark.read.parquet(self.dir)
@@ -148,9 +179,11 @@ class Spine(Workload):
         c0, t0 = tree_cpu_s(), time.perf_counter()
         res = Pipeline(spark, wh).run(df, run_id="pass")
         wall, cpu = time.perf_counter() - t0, tree_cpu_s() - c0
-        got = warehouse_digest(wh, all_sinks())
+        ok = not check or not ref.digest_mismatches(
+            warehouse_digest(wh, all_sinks()), self.ref
+        )
         shutil.rmtree(wh, ignore_errors=True)
-        return wall, cpu, res.rows_in, not ref.digest_mismatches(got, self.ref)
+        return wall, cpu, res.rows_in, ok
 
     def first_op(self, spark) -> None:
         from skewer_spark.parsing import parse_transcripts
@@ -186,9 +219,10 @@ class Curation(Workload):
     def first_op(self, spark) -> None:
         self._pass(spark, self.small)
 
-    def op(self, spark) -> tuple[float, float, int, bool]:
+    def op(self, spark, check: bool = True) -> tuple[float, float, int, bool]:
         wall, cpu, fp = self._pass(spark, self.dir)
-        return wall, cpu, self.docs, not ref.fingerprint_mismatches(fp, self.ref)
+        ok = not check or not ref.fingerprint_mismatches(fp, self.ref)
+        return wall, cpu, self.docs, ok
 
 
 WORKLOADS = {w.name: w for w in (Spine, Curation)}
