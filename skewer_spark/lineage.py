@@ -55,8 +55,7 @@ class LineageLog:
     and the next commit truncates before appending. Appending beats the
     old rewrite-whole-file-and-replace scheme at scale too: commit cost
     is O(new records), not O(history). A torn line anywhere but the
-    tail is real corruption and raises. Legacy whole-array files (the
-    pre-r3 format) are still readable."""
+    tail is real corruption and raises."""
 
     def __init__(self, root: str):
         self.path = os.path.join(root, "_lineage.json")
@@ -66,8 +65,6 @@ class LineageLog:
             return []
         with open(self.path, "rb") as f:
             raw = f.read()
-        if raw[:1] == b"[":  # legacy single-JSON-array format
-            return json.loads(raw)
         lines = raw.split(b"\n")
         recs: list[dict] = []
         for i, line in enumerate(lines):
@@ -124,15 +121,6 @@ class LineageLog:
             if missing:
                 raise ValueError(f"lineage record missing {missing}")
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        if os.path.exists(self.path):
-            with open(self.path, "rb") as f:
-                head = f.read(1)
-            if head == b"[":  # migrate legacy array file to JSONL once
-                legacy = self._read()
-                tmp = self.path + ".tmp"
-                with open(tmp, "w") as f:
-                    f.writelines(json.dumps(r) + "\n" for r in legacy)
-                os.replace(tmp, self.path)
         self._repair_tail()
         with open(self.path, "a") as f:
             f.writelines(json.dumps(r) + "\n" for r in records)

@@ -201,7 +201,7 @@ def funnel_tok_df(
     ``[^a-z0-9 ]`` costs ~265 us-core/doc under the JVM's
     java.util.regex scan loop vs ~2 us/doc under Arrow's RE2 (see
     curation_kernel module docstring; same finding that made Arrow/RE2
-    the parse spine's default kernel). The kernel is RecordBatch ->
+    the parse spine's kernel). The kernel is RecordBatch ->
     RecordBatch (no pandas), and everything downstream is JVM: bodies
     are never shuffled (only 32-byte digests + ints), there is no
     self-join at all, and every per-row expression evaluates exactly

@@ -1,23 +1,24 @@
 """Arrow-native implementation of the composite syslog parse.
 
-Third, fastest implementation of the exact cascade in
-``syslog.parse_batch`` (reference semantics:
+The production parse kernel, run by both parse UDFs
+(``syslog.make_parse_udf``, ``charsets.make_parse_bytes_udf``). It
+implements the exact cascade of ``syslog.parse_batch`` (reference semantics:
 /root/reference/decoders/rfc3164_format.go:28-194,
 rfc5424_format.go:110-230 — see syslog.py for the citation map).
 Equality against the pandas reference implementation is asserted by
 tests/test_arrowparse.py over the corpus and junk inputs, and the
 DuckDB oracle re-checks the production output end-to-end.
 
-Why a third implementation: the pandas cascade (syslog.py) pays ~15
-full-column passes through object-dtype ``.str`` ops (a hidden Python
-loop each), and the tight-loop variant (fastpath.py) is one Python
-loop per row. Here every regex runs ONCE per batch inside Arrow's
-RE2-backed ``extract_regex`` kernel (C++, no per-row Python), branch
-selection is numpy boolean masks, and Python survives only where the
-data demands it: RFC5424 structured-data parameter explosion (a
-per-SD-row loop over an already-matched minority) and the two
-timestamp-format fallbacks (pandas ``to_datetime`` on matched subsets,
-shared with syslog.py so the semantics cannot drift).
+Why not run the reference itself: the pandas cascade (syslog.py) pays
+~15 full-column passes through object-dtype ``.str`` ops (a hidden
+Python loop each), ~2.3x this kernel's cost per core. Here every regex
+runs ONCE per batch inside Arrow's RE2-backed ``extract_regex`` kernel
+(C++, no per-row Python), branch selection is numpy boolean masks, and
+Python survives only where the data demands it: RFC5424
+structured-data parameter explosion (a per-SD-row loop over an
+already-matched minority) and the two timestamp-format fallbacks
+(pandas ``to_datetime`` on matched subsets, shared with syslog.py so
+the semantics cannot drift).
 
 RE2 notes: patterns use ``(?s)`` instead of re.DOTALL, named groups
 only (extract_regex requirement), and RE2 has no backreferences —

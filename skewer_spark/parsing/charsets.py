@@ -30,7 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from skewer_spark.parsing.syslog import PARSED_SCHEMA, get_parse_kernel
+from skewer_spark.parsing.arrowparse import parse_batch_arrow
+from skewer_spark.parsing.syslog import PARSED_SCHEMA
 
 
 def _onebyte_replace(exc: UnicodeError):
@@ -79,17 +80,12 @@ def transcode_series(raw: pd.Series, charset: str) -> pd.Series:
 
 def make_parse_bytes_udf(charset: str = "utf8", mode: str = "auto"):
     """Arrow-batched struct UDF over (raw BINARY, ingest_us BIGINT):
-    transcode inside the batch, then run the selected parse kernel —
-    the batch analog of parserWithEncoding (decode.go:174-185)."""
-    kernel = get_parse_kernel()
+    transcode inside the batch, then run ``parse_batch_arrow`` — the
+    batch analog of parserWithEncoding (decode.go:174-185)."""
 
     @F.pandas_udf(PARSED_SCHEMA)
     def parse_bytes(raw: pd.Series, ingest_us: pd.Series) -> pd.DataFrame:
         text = transcode_series(raw, charset)
-        if mode == "auto":
-            return kernel(text, ingest_us)
-        from skewer_spark.parsing.arrowparse import parse_batch_arrow
-
         return parse_batch_arrow(text, ingest_us, mode=mode)
 
     return parse_bytes.asNondeterministic()  # same rationale as make_parse_udf

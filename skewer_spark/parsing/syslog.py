@@ -19,10 +19,11 @@ Semantics are a faithful re-expression of the reference decoders:
   config (decoders/decode.go:19-30); the graft auto-detects: ``<PRI>1 ``
   prefix -> RFC5424, else RFC3164 cascade.
 
-Implementation: ONE Arrow-batched pandas UDF doing the whole cascade with
-pandas ``.str`` vectorized ops; the only Python loop is over SD elements
-of the (already-matched) RFC5424 subset, per batch, with compiled regexes
-— the "vectorized grok" pattern (no per-row Python round trips).
+Implementation: ``parse_batch`` here is the semantic reference — the
+whole cascade in pandas ``.str`` vectorized ops, readable branch by
+branch against the Go source. Tests compare the production kernel,
+``arrowparse.parse_batch_arrow`` (RE2/numpy, what ``make_parse_udf``
+runs inside the Arrow-batched pandas UDF), against it row by row.
 
 Deviations from the reference (documented, deterministic):
 - ``Mmm dd`` year backfill uses the row's ingest ``ts`` year instead of
@@ -95,17 +96,16 @@ def _to_us(dt: pd.Series) -> pd.Series:
     return dt.dt.tz_convert("UTC").dt.as_unit("us").astype("int64")
 
 
-# Supported year range for RFC3339 timestamps (all kernels + oracle).
+# Supported year range for RFC3339 timestamps (both kernels + oracle).
 # Inside datetime64[ns] (1677-09-21..2262-04-11) AND the float64-exact
-# epoch-micros range (|us| < 2^53 ~ year 2255), so every kernel —
-# pandas (datetime64[ns]), fastpath/arrow (integer civil arithmetic),
-# JVM SQL (Spark timestamps) and DuckDB — represents every accepted
-# value exactly and rejects the same lines. Out-of-range years are a
-# parse failure everywhere (the 3164 cascade degrades, 5424 errors),
-# pinning the cross-kernel equality contract on attacker-controllable
-# input. The reference's Go time.Parse accepts any year; bounding is a
-# documented deviation (COVERAGE.md) chosen over silently divergent
-# kernels.
+# epoch-micros range (|us| < 2^53 ~ year 2255), so the pandas reference
+# (datetime64[ns]), the arrow kernel (integer civil arithmetic) and
+# DuckDB all represent every accepted value exactly and reject the
+# same lines. Out-of-range years are a parse failure everywhere (the
+# 3164 cascade degrades, 5424 errors), pinning the cross-kernel
+# equality contract on attacker-controllable input. The reference's Go
+# time.Parse accepts any year; bounding is a documented deviation
+# (COVERAGE.md) chosen over silently divergent kernels.
 TS_YEAR_MIN, TS_YEAR_MAX = 1678, 2250
 
 
@@ -325,8 +325,7 @@ def parse_batch(text: pd.Series, ingest_us: pd.Series) -> pd.DataFrame:
                     # bytes.Split, which PRESERVES empty tokens on
                     # consecutive spaces — a nonempty-token regex fails
                     # to match 'host  tag' and would leak NaN into the
-                    # non-null schema (fastpath.py models the Split
-                    # semantics directly; this keeps the kernels equal)
+                    # non-null schema (this keeps the kernels equal)
                     tp = two.str.extract(r"^([^ ]*) (.*)$", flags=re.DOTALL)
                     t0, t1 = tp[0], tp[1]
                     ipish = (t0.str.count(":") == 7) | (t0.str.count(r"\.") == 3)
@@ -374,36 +373,15 @@ def parse_batch(text: pd.Series, ingest_us: pd.Series) -> pd.DataFrame:
     return res
 
 
-def get_parse_kernel():
-    """Batch-parse kernel selection (all equality-tested against
-    ``parse_batch``, the semantic reference — tests/test_fastpath.py):
-
-    - ``arrow`` (default): RE2/numpy kernels, ~2.3x the pandas cascade
-      per core (parsing/arrowparse.py)
-    - ``pandas``: this module's cascade
-    - ``fast``: tight-loop variant (parsing/fastpath.py)
-    """
-    import os
-
-    kernel = os.environ.get("SKEWER_PARSE_KERNEL", "arrow")
-    if kernel == "pandas":
-        return parse_batch
-    if kernel == "fast":
-        from skewer_spark.parsing.fastpath import parse_batch_fast
-
-        return parse_batch_fast
-    from skewer_spark.parsing.arrowparse import parse_batch_arrow
-
-    return parse_batch_arrow
-
-
 def make_parse_udf():
-    """Arrow-batched struct-returning pandas UDF over (text, ingest_us)."""
-    kernel = get_parse_kernel()
+    """Arrow-batched struct-returning pandas UDF over (text, ingest_us),
+    running the production kernel ``arrowparse.parse_batch_arrow``."""
+    # local import: arrowparse imports this module's timestamp helpers
+    from skewer_spark.parsing.arrowparse import parse_batch_arrow
 
     @F.pandas_udf(PARSED_SCHEMA)
     def parse_syslog(text: pd.Series, ingest_us: pd.Series) -> pd.DataFrame:
-        return kernel(text, ingest_us)
+        return parse_batch_arrow(text, ingest_us)
 
     # The parse IS deterministic, but declaring it nondeterministic stops
     # Catalyst from duplicating the (expensive) UDF when a downstream

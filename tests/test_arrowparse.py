@@ -1,8 +1,7 @@
-"""The four parse implementations must agree exactly:
-- parsing/syslog.py     pandas vectorized (the semantic reference)
-- parsing/fastpath.py   single-pass tight loop
-- parsing/arrowparse.py Arrow/RE2 kernels (the pipeline default)
-- parsing/sqlparse.py   JVM Column expressions (whole-stage codegen)
+"""The production parse kernel must agree exactly with the reference:
+- parsing/syslog.py     ``parse_batch``, pandas (the semantic reference)
+- parsing/arrowparse.py ``parse_batch_arrow``, Arrow/RE2 (the pipeline kernel)
+both in process and through the Spark UDF (``parse_transcripts``).
 """
 
 from __future__ import annotations
@@ -11,9 +10,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from skewer_spark.datagen import ensure_transcripts
 from skewer_spark.parsing import parse_transcripts
-from skewer_spark.parsing.fastpath import parse_batch_fast
+from skewer_spark.parsing.arrowparse import parse_batch_arrow
 from skewer_spark.parsing.syslog import parse_batch
 
 JUNK = [
@@ -67,92 +65,69 @@ def _assert_frames_equal(a: pd.DataFrame, b: pd.DataFrame, ctx: str):
         assert eq.all(), (ctx, c, np.where(~eq)[0][:5])
 
 
-def test_fastpath_equals_reference_on_corpus():
-    import pyarrow.parquet as pq
-
-    tr = pq.read_table(ensure_transcripts("/root/testdata/sf0.001")).to_pandas()
-    ing = pd.to_datetime(tr["ts"]).dt.as_unit("us").astype("int64")
-    _assert_frames_equal(
-        parse_batch(tr["text"], ing), parse_batch_fast(tr["text"], ing), "corpus"
-    )
+def _ingest_us(ts: pd.Series) -> pd.Series:
+    return pd.to_datetime(ts).dt.as_unit("us").astype("int64")
 
 
-def test_fastpath_equals_reference_on_junk():
-    s = pd.Series(JUNK)
-    ing = pd.Series([1_700_000_000_000_000] * len(s))
-    _assert_frames_equal(parse_batch(s, ing), parse_batch_fast(s, ing), "junk")
-
-
-def test_arrowparse_equals_reference_on_corpus():
-    import pyarrow.parquet as pq
-
-    from skewer_spark.parsing.arrowparse import parse_batch_arrow
-
-    tr = pq.read_table(ensure_transcripts("/root/testdata/sf0.001")).to_pandas()
-    ing = pd.to_datetime(tr["ts"]).dt.as_unit("us").astype("int64")
+def test_arrowparse_equals_reference_on_corpus(transcripts_pdf):
+    tr = transcripts_pdf
+    ing = _ingest_us(tr["ts"])
     _assert_frames_equal(
         parse_batch(tr["text"], ing), parse_batch_arrow(tr["text"], ing), "corpus"
     )
 
 
 def test_arrowparse_equals_reference_on_junk():
-    from skewer_spark.parsing.arrowparse import parse_batch_arrow
-
     s = pd.Series(JUNK)
     ing = pd.Series([1_700_000_000_000_000] * len(s))
     _assert_frames_equal(parse_batch(s, ing), parse_batch_arrow(s, ing), "junk")
 
 
-def test_sqlparse_equals_reference(spark, sf_dir):
-    from skewer_spark.parsing.sqlparse import parse_transcripts_sql
+PARSED_COLS = [
+    "priority", "facility", "severity", "version", "time_reported",
+    "time_generated", "hostname", "appname", "procid", "msgid",
+    "structured", "message", "props_flat", "parse_format", "parse_error",
+]
 
-    df = spark.read.parquet(ensure_transcripts(sf_dir))
-    cols = [
-        "conv_id", "turn_idx", "priority", "facility", "severity", "version",
-        "time_reported", "time_generated", "hostname", "appname", "procid",
-        "msgid", "structured", "message", "props_flat", "parse_format",
-        "parse_error",
-    ]
+
+def test_parse_transcripts_equals_reference(spark, sf_dir, transcripts_pdf):
+    # the production path end to end: the pandas UDF, the struct
+    # expansion and the unix_micros(ts) ingest column, row by row
+    from skewer_spark.datagen import ensure_transcripts
+
     key = ["conv_id", "turn_idx"]
-    a = parse_transcripts(df).select(cols).toPandas().sort_values(key).reset_index(drop=True)
-    b = (
-        parse_transcripts_sql(df).select(cols).toPandas()
+    df = spark.read.parquet(ensure_transcripts(sf_dir))
+    got = (
+        parse_transcripts(df).select(*key, *PARSED_COLS).toPandas()
         .sort_values(key).reset_index(drop=True)
     )
-    _assert_frames_equal(a, b, "sqlparse")
+    tr = transcripts_pdf.sort_values(key).reset_index(drop=True)
+    want = parse_batch(tr["text"], _ingest_us(tr["ts"]))
+    assert (got[key].to_numpy() == tr[key].to_numpy()).all()
+    _assert_frames_equal(want, got[PARSED_COLS], "parse_transcripts corpus")
 
 
-def test_sqlparse_junk_lines(spark):
-    from skewer_spark.parsing.sqlparse import parse_transcripts_sql
-
+def test_parse_transcripts_junk_lines(spark):
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
         [(str(i), 0, "", t, "") for i, t in enumerate(JUNK)],
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.timestamp_micros(F.lit(1_700_000_000_000_000)))
-    cols = [
-        "priority", "facility", "severity", "version", "time_reported",
-        "time_generated", "hostname", "appname", "procid", "msgid",
-        "structured", "message", "props_flat", "parse_format", "parse_error",
-    ]
     got = (
-        parse_transcripts_sql(df).select("conv_id", *cols).toPandas()
+        parse_transcripts(df).select("conv_id", *PARSED_COLS).toPandas()
         .sort_values("conv_id", key=lambda s: s.astype(int))
         .reset_index(drop=True)
     )
     want = parse_batch(pd.Series(JUNK), pd.Series([1_700_000_000_000_000] * len(JUNK)))
-    _assert_frames_equal(want, got[cols], "sql junk")
+    _assert_frames_equal(want, got[PARSED_COLS], "parse_transcripts junk")
 
 
 def test_kernels_survive_hostile_ingest_years():
     # an ingest timestamp past datetime64[ns] (2262) or datetime.max
     # (9999) previously CRASHED the pandas and arrow kernels
-    # (pd.to_datetime OutOfBoundsDatetime) and fastpath
-    # (fromtimestamp OverflowError) during stamp-year backfill; all
-    # three must degrade the stamp rows identically instead
-    from skewer_spark.parsing.arrowparse import parse_batch_arrow
-
+    # (pd.to_datetime OutOfBoundsDatetime) during stamp-year backfill;
+    # both must degrade the stamp rows identically instead
     lines = [
         "<13>Jan 05 03:04:05 host app: hi",   # needs year backfill
         "<13>2024-01-01T00:00:00Z host app: hi",  # no backfill needed
@@ -161,10 +136,8 @@ def test_kernels_survive_hostile_ingest_years():
     for ing_us in (int(3e17), int(8e18), -int(3e17)):  # years ~11476, ~255k, ~-7500
         ing = pd.Series([ing_us] * len(lines), dtype="int64")
         a = parse_batch(pd.Series(lines), ing)
-        b = parse_batch_fast(pd.Series(lines), ing)
-        c = parse_batch_arrow(pd.Series(lines), ing)
-        _assert_frames_equal(a, b, f"fast ing={ing_us}")
-        _assert_frames_equal(a, c, f"arrow ing={ing_us}")
+        b = parse_batch_arrow(pd.Series(lines), ing)
+        _assert_frames_equal(a, b, f"arrow ing={ing_us}")
         # the stamp row degrades (whole rest in message, ingest time)
         assert a["message"][0] == "Jan 05 03:04:05 host app: hi"
         assert a["time_reported"][0] == ing_us

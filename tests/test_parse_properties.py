@@ -2,11 +2,12 @@
 
 Two layers:
 
-1. Differential fuzzing — the three batch kernels (pandas reference,
-   tight-loop, Arrow/RE2) must agree EXACTLY on arbitrary input, valid
-   or garbage. This is the strongest guard on the no-fail cascade
-   (rfc3164_format.go:31-53): every branch disagreement between
-   implementations is a bug in at least one of them.
+1. Differential fuzzing — the production Arrow/RE2 kernel
+   (``parse_batch_arrow``) must agree EXACTLY with the pandas reference
+   (``parse_batch``) on arbitrary input, valid or garbage. This is the
+   strongest guard on the no-fail cascade (rfc3164_format.go:31-53):
+   every branch disagreement between the two is a bug in at least one
+   of them.
 
 2. Generative round-trips — build RFC5424/RFC3164 lines from random
    components with a local formatter mirroring the reference encoders
@@ -24,33 +25,23 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from skewer_spark.parsing.arrowparse import parse_batch_arrow
-from skewer_spark.parsing.fastpath import parse_batch_fast
 from skewer_spark.parsing.syslog import parse_batch
 
 ING = 1_700_000_000_000_000  # fixed ingest ts (2023-11-14T22:13:20Z)
 
 
-def _run_all(lines: list[str]):
+def _assert_agree(lines: list[str]):
     s = pd.Series(lines, dtype=object)
     ing = pd.Series([ING] * len(s))
-    return (
-        parse_batch(s, ing),
-        parse_batch_fast(s, ing),
-        parse_batch_arrow(s, ing),
-    )
-
-
-def _assert_agree(lines: list[str]):
-    a, b, c = _run_all(lines)
-    for name, other in (("fastpath", b), ("arrow", c)):
-        for col in a.columns:
-            eq = a[col].astype(str).values == other[col].astype(str).values
-            if not eq.all():
-                i = int(np.where(~eq)[0][0])
-                raise AssertionError(
-                    f"{name} diverges on col {col!r} for input {lines[i]!r}: "
-                    f"ref={a[col][i]!r} got={other[col][i]!r}"
-                )
+    a, b = parse_batch(s, ing), parse_batch_arrow(s, ing)
+    for col in a.columns:
+        eq = a[col].astype(str).values == b[col].astype(str).values
+        if not eq.all():
+            i = int(np.where(~eq)[0][0])
+            raise AssertionError(
+                f"arrow diverges on col {col!r} for input {lines[i]!r}: "
+                f"ref={a[col][i]!r} got={b[col][i]!r}"
+            )
 
 
 # biased alphabet: syslog structure characters are heavily represented

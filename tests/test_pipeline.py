@@ -292,26 +292,6 @@ def test_lineage_torn_tail_tolerated_and_repaired(tmp_path):
         log.records()
 
 
-def test_lineage_legacy_array_migration(tmp_path):
-    # pre-r3 journals were one JSON array swapped via os.replace; they
-    # must read back and convert to JSONL on the next commit
-    import json
-
-    from skewer_spark.lineage import LINEAGE_COLS, LineageLog
-
-    log = LineageLog(str(tmp_path))
-    legacy = [dict(zip(LINEAGE_COLS,
-                       ["r0", "route", "sink_app", 0, 5, 5, "", "", 3, 1.0]))]
-    with open(log.path, "w") as f:
-        json.dump(legacy, f)
-    assert len(log.records()) == 1
-    rec = dict(run_id="r1", stage="route", sink="sink_app",
-               partition_id=0, rows_in=10, rows_out=10, wall_ms=5)
-    log.commit([rec])
-    assert list(log.records().run_id) == ["r0", "r1"]
-    assert open(log.path, "rb").read()[:1] == b"{"      # migrated to JSONL
-
-
 def test_time_travel_reads(spark, tmp_path):
     # Iceberg VERSION AS OF analog: as_of pins the read to the commit
     # log prefix ending at that snapshot; compaction expires history

@@ -14,6 +14,18 @@ from skewer_spark.datagen import ensure_transcripts
 from skewer_spark.queries import load_routed
 
 
+def await_done(q, timeout: int) -> None:
+    """Wait for a bounded (availableNow) query to finish cleanly. A slow
+    host fails HERE as a timeout, never later as a partial-rows
+    mismatch; a timed-out query is stopped so it cannot leak into the
+    next test."""
+    done = q.awaitTermination(timeout)
+    if not done:
+        q.stop()
+    assert done, f"streaming query did not finish within {timeout}s"
+    assert q.exception() is None, q.exception()
+
+
 @pytest.fixture(scope="module")
 def stream_input(spark, sf_dir, tmp_path_factory):
     """Split transcripts into multiple files so several micro-batches fire."""
@@ -28,7 +40,7 @@ def test_stream_fanout_matches_batch(spark, sf_dir, stream_input, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stream = S.read_transcript_stream(spark, stream_input, max_files=2)
     q = S.start_fanout_stream(stream, spark, out, ckpt)
-    q.awaitTermination(120)
+    await_done(q, 120)
     got = spark.read.parquet(os.path.join(out, "sinks"))
     want = load_routed(spark, sf_dir)
     per_sink_got = {r["sink"]: r["count"] for r in got.groupBy("sink").count().collect()}
@@ -45,13 +57,13 @@ def test_stream_resume_is_exactly_once(spark, stream_input, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stream = S.read_transcript_stream(spark, stream_input)
     q1 = S.start_fanout_stream(stream, spark, out, ckpt)
-    q1.awaitTermination(120)
+    await_done(q1, 120)
     n1 = spark.read.parquet(os.path.join(out, "sinks")).count()
     # restart: same checkpoint, no new files -> no new rows
     q2 = S.start_fanout_stream(
         S.read_transcript_stream(spark, stream_input), spark, out, ckpt
     )
-    q2.awaitTermination(120)
+    await_done(q2, 120)
     n2 = spark.read.parquet(os.path.join(out, "sinks")).count()
     assert n1 == n2
 
@@ -67,7 +79,7 @@ def test_windowed_severity_counts(spark, stream_input, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_done(q, 120)
     # append mode only emits closed windows; with availableNow the final
     # watermark leaves the last window open — compare against batch for
     # the emitted subset
@@ -88,7 +100,7 @@ def test_conversation_state_stream(spark, sf_dir, stream_input, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_done(q, 180)
     # keep the LAST update per conv (update mode emits every change)
     final = spark.sql(
         """
@@ -144,7 +156,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_done(q, 120)
 
     line = lambda ts: f"<13>{ts} h app: x"
     # run 1: events 10:00/10:30 -> watermark ends at 10:30 - 10min = 10:20
@@ -287,7 +299,7 @@ def test_gelf_chunk_reassembly_stream_with_expiry(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_done(q, 120)
     got = {
         (r["msg_id"], r["status"]): r["line"]
         for r in spark.read.parquet(str(outdir)).collect()
@@ -341,7 +353,7 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_done(q, 120)
     got = [r["text"] for r in spark.read.parquet(str(outdir)).collect()]
     assert sorted(got) == ["hello world", "unique one", "unique two"]
 
@@ -398,7 +410,7 @@ def test_dedup_stream_state_eviction(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_done(q, 120)
     got = sorted(
         (r["text"], r["ts"]) for r in spark.read.parquet(str(outdir)).collect()
     )
@@ -496,7 +508,7 @@ def test_sessionize_stream_matches_batch(spark, tmp_path, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_done(q, 180)
     got = sorted(
         tuple(r) for r in spark.read.parquet(str(outdir)).collect()
         if r["user_id"] >= 0
@@ -535,7 +547,7 @@ def test_exactly_once_stream_replay(spark, tmp_path, sf_dir):
     q = start_exactly_once_pipeline_stream(
         stream, spark, wh, str(tmp_path / "ckpt")
     )
-    q.awaitTermination(300)
+    await_done(q, 300)
 
     pipe = Pipeline(spark, wh)
     streamed = {
@@ -580,7 +592,7 @@ def test_new_checkpoint_same_warehouse_reprocesses(spark, tmp_path, sf_dir):
         q = start_exactly_once_pipeline_stream(
             stream, spark, wh, str(tmp_path / "ckpt")
         )
-        q.awaitTermination(300)
+        await_done(q, 300)
 
     run_incarnation("in1")
     n1 = Pipeline(spark, wh).table("sink_default").read(spark).count()
@@ -635,7 +647,7 @@ def test_sessionize_stream_late_in_watermark_events(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_done(q, 180)
     got = {
         (r.session_idx, r.n_events, r.start_us, r.duration_us)
         for r in spark.read.parquet(str(outdir)).collect()
@@ -698,7 +710,7 @@ def test_line_dedup_stream_drops_cross_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_done(q, 180)
     md5 = lambda s: hashlib.md5(s.encode()).hexdigest()
     got = {
         r.doc_id: (r.n_kept, r.clean_md5)
@@ -753,7 +765,7 @@ def test_legacy_stream_id_replays_old_format_run_ids(spark, tmp_path, sf_dir):
     q = start_exactly_once_pipeline_stream(
         stream, spark, wh, str(tmp_path / "ckpt"), stream_id=""
     )
-    q.awaitTermination(300)
+    await_done(q, 300)
     pipe = Pipeline(spark, wh)
     n1 = pipe.table("sink_default").read(spark).count()
     assert n1 > 0
@@ -811,7 +823,7 @@ def test_sessionize_reactivated_user_numbering(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_done(q, 180)
     got = sorted(
         (r.start_us, r.session_idx, r.n_events)
         for r in spark.read.parquet(str(outdir)).collect()
@@ -927,7 +939,7 @@ def test_line_dedup_stream_end_state_matches_batch(spark, tmp_path, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_done(q, 300)
         return spark.read.parquet(str(outdir))
 
     # (a) surviving span multiset == every distinct corpus span, once
@@ -1008,7 +1020,7 @@ def test_curation_stream_end_state_matches_batch(spark, tmp_path):
     q = curation_stream(
         stream, str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
-    q.awaitTermination(180)
+    await_done(q, 180)
 
     got = sorted(
         map(
@@ -1048,7 +1060,7 @@ def test_curation_stream_end_state_matches_batch(spark, tmp_path):
     q2 = curation_stream(
         stream2, str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
-    q2.awaitTermination(60)
+    await_done(q2, 60)
     n_after = spark.read.parquet(str(tmp_path / "out" / "curated")).count()
     assert n_after == len(got)
 
@@ -1122,7 +1134,7 @@ def test_curation_stream_fps_compaction_preserves_state(spark, tmp_path):
         stream, str(tmp_path / "out"), str(tmp_path / "ckpt"),
         compact_every=2,
     )
-    q.awaitTermination(180)
+    await_done(q, 180)
     out = spark.read.parquet(str(tmp_path / "out" / "curated"))
     ids = {r[0] for r in out.select("doc_id").collect()}
     assert 9020 not in ids and 20 in ids  # post-compaction dedup fired
@@ -1207,7 +1219,7 @@ def test_gelf_stale_group_expires_inline_with_new_chunk(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)  # old code: PySparkValueError kills the query
+    await_done(q, 120)  # old code: PySparkValueError kills the query
     got = {
         (r["msg_id"], r["status"]): r["line"]
         for r in spark.read.parquet(str(outdir)).collect()
@@ -1257,7 +1269,7 @@ def test_gelf_inconsistent_seq_count_discards_group(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_done(q, 120)
     rows = spark.read.parquet(str(outdir)).collect()
     assert [(r["msg_id"], r["line"], r["status"]) for r in rows] == [
         ("mA", "ok3", "ok")
@@ -1299,7 +1311,7 @@ def test_conversation_state_all_null_turn_idx_group(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_done(q, 120)
     got = {
         r["conv_id"]: r
         for r in spark.sql("select * from conv_state_nulls").collect()
@@ -1337,7 +1349,7 @@ def test_curation_stream_new_incarnation_cannot_bypass_guard(spark, tmp_path):
         .parquet(str(indir / "f*"))
     )
     q = curation_stream(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    await_done(q, 120)
 
     # lose the engine checkpoint (bounds/fps survive) and present a
     # DIFFERENT, overlapping slice as the new incarnation's batch 0
@@ -1398,7 +1410,7 @@ def test_lm_score_stream_matches_batch_op(spark, tmp_path):
     q = lm_score_stream(
         stream, model_dir, str(tmp_path / "out"), str(tmp_path / "ck")
     )
-    q.awaitTermination(180)
+    await_done(q, 180)
 
     got = sorted(
         map(

@@ -190,7 +190,7 @@ def main() -> None:
         "measured decision, not a style break: the normalization "
         "class [^a-z0-9 ] costs ~265 us-core/doc under the JVM's "
         "java.util.regex scan loop vs ~2 us/doc under RE2 — the same "
-        "finding that made Arrow/RE2 the parse spine's default kernel.",
+        "finding that made Arrow/RE2 the parse spine's kernel.",
         formatted(funnel_tok_df(spark, sf_dir, augment=False)),
     ))
     sections.append((
