@@ -2288,11 +2288,12 @@ def lm_bigram_score_sql(scale: int = LM_SCALE) -> str:
     and Spark INLINES CTEs, so the gate plan runs the scoring subtree
     twice — at production scale stage the per-doc score frame to
     parquet first (the dsir_weights/tfidf_terms rule).
-    Integer headroom: sp <= scale, so score <= scale * n_bigrams and
-    score * fn needs scale * bigrams_per_doc * total_bigrams < 2^63 —
-    at scale=1e6 that bounds total scored bigrams to ~1e10/doc_len.
-    The mitigation at larger corpora is moving the two cross-products
-    to DECIMAL(38,0) — NOT lowering scale: sp floors to 0 whenever
+    Integer headroom: sp <= scale, so score <= scale * n_bigrams, and
+    score * fn reaches scale * bigrams_per_doc * total_bigrams — past
+    2^63 at scale=1e6 once total scored bigrams pass ~1e10/doc_len.
+    The keep rule therefore cross-multiplies in DECIMAL(38,0)
+    (lm_keep_rule), which holds any product of two BIGINTs. Scale is
+    NOT lowered to buy headroom: sp floors to 0 whenever
     cu+V > scale*(cb+1), so scale must stay well ABOVE the target
     vocabulary size or every rare bigram quantizes to zero and the
     filter silently keeps everything (lm_train_model refuses to
@@ -2318,5 +2319,19 @@ SELECT doc_id, n_bigrams, score,
        CAST(ntile(3) OVER (
          ORDER BY IDIV(score * {scale}, n_bigrams) DESC, doc_id
        ) AS INT) AS bucket,
-       (score * sel.fn >= n_bigrams * sel.fs) AS kept
+       {lm_keep_rule("sel.fn", "sel.fs")} AS kept
 FROM score CROSS JOIN sel"""
+
+
+def lm_keep_rule(fn: str, fs: str) -> str:
+    """The LM keep rule score / n_bigrams >= fs / fn (the doc's mean
+    scaled probability is at least the reference mean) as an integer
+    cross-multiplication. Both products run in DECIMAL(38,0): each
+    factor is a BIGINT, so a product is below 2^126 < 10^38, while in
+    BIGINT it overflows at reference corpus sizes. ``fn``/``fs`` are SQL
+    expressions (columns or the frozen integer constants)."""
+    d = "DECIMAL(38,0)"
+    return (
+        f"(CAST(score AS {d}) * CAST({fn} AS {d}) "
+        f">= CAST(n_bigrams AS {d}) * CAST({fs} AS {d}))"
+    )

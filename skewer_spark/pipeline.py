@@ -46,6 +46,7 @@ from skewer_spark.routing.rules import DEAD_LETTER_SINK
 from skewer_spark.skew import salted_repartition
 
 AGG_KEYS = ("facility", "severity", "tool")
+ROLLUP_SCHEMA = "facility BIGINT, severity BIGINT, tool STRING"
 
 
 @dataclass
@@ -84,6 +85,23 @@ class Pipeline:
 
     def table(self, name: str) -> IceLiteTable:
         return IceLiteTable(self.warehouse, name)
+
+    def rollup_scan(self, sink_files: list[tuple[str, list[str]]]) -> DataFrame:
+        """The phase-3 rollup input: (sink, facility, severity, tool)
+        over the given (sink, data files) pairs. The pinned read schema
+        prunes the scan to the key columns and skips the schema
+        inference job a bare ``read.parquet`` starts per sink; Spark
+        widens INT32 key columns to the schema's BIGINT."""
+        frames = [
+            self.spark.read.schema(ROLLUP_SCHEMA)
+            .parquet(*files)
+            .select(F.lit(sink).alias("sink"), *AGG_KEYS)
+            for sink, files in sink_files
+        ]
+        u = frames[0]
+        for f2 in frames[1:]:
+            u = u.unionByName(f2)
+        return u
 
     def compact_sinks(
         self, target_file_bytes: int = 128 * 1024 * 1024, min_files: int = 4
@@ -414,7 +432,7 @@ class Pipeline:
             # fall back to ONE full recompute committed as an OVERWRITE
             # snapshot — totals stay exact because the overwrite
             # replaces every prior delta.
-            frames = []
+            sink_files = []
             for rule in self.rules:  # dead letter excluded from rollups
                 t = self.table(rule.sink)
                 run_snap = next(
@@ -427,23 +445,15 @@ class Pipeline:
                     continue  # sink had no rows this run
                 files = [f for f, _ in t.per_file_rows(run_snap.snapshot_id)]
                 if files:
-                    frames.append(
-                        self.spark.read.parquet(*files).select(
-                            F.lit(rule.sink).alias("sink"), *AGG_KEYS
-                        )
-                    )
+                    sink_files.append((rule.sink, files))
             if agg_overwrite:
-                frames = [
-                    t.read(self.spark).select(
-                        F.lit(rule.sink).alias("sink"), *AGG_KEYS
-                    )
+                sink_files = [
+                    (rule.sink, files)
                     for rule in self.rules
-                    if (t := self.table(rule.sink)).data_files()
+                    if (files := self.table(rule.sink).data_files())
                 ]
-            if frames:
-                u = frames[0]
-                for f2 in frames[1:]:
-                    u = u.unionByName(f2)
+            if sink_files:
+                u = self.rollup_scan(sink_files)
                 melted = u.select(
                     "sink",
                     F.explode(
@@ -465,6 +475,19 @@ class Pipeline:
                     .toPandas()
                 )
                 agg_wall = int((time.time() - t0) * 1000)
+                # agg_facility/agg_severity hold int32 keys (the
+                # reference's Priority), but a sink transform can widen
+                # a key: refuse it before any agg commit, never wrap it
+                for key in ("facility", "severity"):
+                    sub = counts[counts.key == key]
+                    v = sub["value"].astype("int64")
+                    wide = sub[(v < -(2**31)) | (v >= 2**31)]
+                    if len(wide):
+                        raise ValueError(
+                            f"sink {wide.sink.iloc[0]!r} holds {key}="
+                            f"{wide.value.iloc[0]}, which does not fit the "
+                            f"int32 column of agg_{key}"
+                        )
                 for key in pending_aggs:
                     sub = counts[counts.key == key][["sink", "value", "n"]].copy()
                     if key in ("facility", "severity"):
@@ -526,7 +549,7 @@ class Pipeline:
                             ]
                         )
 
-            if not frames:
+            if not sink_files:
                 # zero routed rows this run (every sink snapshot empty):
                 # nothing to aggregate, but the units must still be
                 # marked committed — snapshot_lineage's contract — or

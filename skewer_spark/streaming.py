@@ -1197,7 +1197,7 @@ def lm_score_stream(
         + f"""
 SELECT doc_id, n_bigrams, score,
        IDIV(score * {C.LM_SCALE}, n_bigrams) AS mean_sp,
-       (score * {fn} >= n_bigrams * {fs}) AS kept
+       {C.lm_keep_rule(str(fn), str(fs))} AS kept
 FROM score"""
     )
 

@@ -803,6 +803,39 @@ def test_lm_bigram_score_empty_target_slice_degrades_identically(spark):
     )
 
 
+def test_lm_keep_rule_exact_past_bigint_in_both_engines(spark):
+    # the keep rule's cross-products score * fn and n_bigrams * fs pass
+    # 2^63 at reference corpus sizes; in BIGINT Spark's ANSI mode
+    # aborts the job (and a non-ANSI engine would wrap), so the rule
+    # multiplies in DECIMAL(38,0) and must match Python's exact ints
+    import duckdb
+
+    from skewer_spark.ops import corpus_ops as C
+    from skewer_spark.ops.portable import to_duck, to_spark
+
+    m = 2**63 - 1
+    n, f = 10**13 + 1, 7 * 10**13 + 3  # mean exactly f/n: >= holds
+    rows = [
+        (m, m, m, m),
+        (f, n, n, f),
+        (f - 1, n, n, f),
+        (3 * 10**12, 10**6, 2**62, 2**40),
+        (2**40, 10**6, 2**62, 2**62),
+    ]
+    want = [s * fn >= nb * fs for s, nb, fn, fs in rows]
+    assert any(s * fn >= 2**63 for s, _, fn, _ in rows)
+    sql = (
+        f"SELECT id, {C.lm_keep_rule('fn', 'fs')} AS kept FROM "
+        "(VALUES "
+        + ", ".join(f"({i}, {s}, {nb}, {fn}, {fs})" for i, (s, nb, fn, fs) in enumerate(rows))
+        + ") t(id, score, n_bigrams, fn, fs)"
+    )
+    got_spark = [r.kept for r in sorted(spark.sql(to_spark(sql)).collect())]
+    got_duck = [k for _, k in sorted(duckdb.connect().execute(to_duck(sql)).fetchall())]
+    assert got_spark == want
+    assert got_duck == want
+
+
 def test_ann_numpy_zero_norm_vector_is_deterministic(spark, tmp_path):
     # a zero-norm embedding must yield cosine 0 (never NaN): NaN sorts
     # LAST in the numpy prune but FIRST in Spark's descending window,

@@ -373,6 +373,27 @@ def test_two_runs_agg_totals_do_not_double_count(spark, sf_dir, tmp_path):
     assert got_sev == want
 
 
+def test_rollup_refuses_keys_that_overflow_int32(spark, sf_dir, tmp_path):
+    # a sink transform can widen facility past int32: the rollup must
+    # name the sink, key and value instead of wrapping 4294967317 to 21
+    # in agg_facility, and must commit no agg snapshot on the way
+    from skewer_spark.routing.rules import DEFAULT_RULES, RouteRule
+
+    wide = RouteRule(
+        "sink_wide",
+        "'w'",
+        "TRUE",
+        transform_exprs=(("facility", "CAST(facility AS BIGINT) + 4294967296"),),
+    )
+    p = Pipeline(spark, str(tmp_path / "wh"), rules=(DEFAULT_RULES[0], wide))
+    with pytest.raises(
+        ValueError, match=r"'sink_wide' holds facility=42949672\d\d.*agg_facility"
+    ):
+        p.run(load_transcripts(spark, sf_dir), run_id="wide")
+    for key in ("facility", "severity", "tool"):
+        assert not p.table(f"agg_{key}").snapshots()
+
+
 def test_empty_dead_letter_unit_commits_and_staging_cleans(spark, sf_dir, tmp_path):
     # zero rejected rows -> the dead_letter snapshot is EMPTY; its work
     # unit must still get a lineage record (zero-row marker) so the

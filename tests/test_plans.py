@@ -84,18 +84,32 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
 
 
 def test_rollup_scan_prunes_to_key_columns(spark, sf_dir, tmp_path):
-    """The pipeline's phase-3 rollups must scan only (sink, key) columns
-    from the committed files, never the wide text/message columns."""
-    from skewer_spark.pipeline import Pipeline
+    """The pipeline's phase-3 rollup scan (Pipeline.rollup_scan, which
+    run() uses) must read only the key columns from the committed
+    files, never the wide text/message columns, and must start no
+    schema-inference job while the frame is built."""
+    from skewer_spark.pipeline import AGG_KEYS, Pipeline
 
     wh = str(tmp_path / "wh")
     p = Pipeline(spark, wh)
     p.run(spark.read.parquet(ensure_transcripts(sf_dir)), run_id="r")
-    t = p.table("sink_app").read(spark).select("facility")
-    plan = plan_of(t)
-    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "facility" in read_schema
-    assert "message" not in read_schema and "text" not in read_schema
+    sink_files = [
+        (s, p.table(s).data_files()) for s in ("sink_app", "sink_default")
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("rollup-scan-build", "rollup scan construction")
+    try:
+        scan = p.rollup_scan(sink_files)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("rollup-scan-build") == []
+    plan = plan_of(scan)
+    for read_schema in [
+        part.splitlines()[0] for part in plan.split("ReadSchema:")[1:]
+    ]:
+        assert all(k in read_schema for k in AGG_KEYS), read_schema
+        assert "message" not in read_schema and "text" not in read_schema
+    assert scan.columns == ["sink", *AGG_KEYS]
 
 
 def test_parse_input_pruned_to_text_and_ts(spark, sf_dir):

@@ -1422,6 +1422,52 @@ def test_lm_score_stream_matches_batch_op(spark, tmp_path):
     )
     assert got == want
 
+
+def test_lm_score_stream_keep_rule_survives_bigint_overflow(spark, sf_dir, tmp_path):
+    # frozen constants from a reference corpus large enough that
+    # score * fn passes 2^63: scaling (fn, fs) by one factor keeps the
+    # cutoff fs/fn, so `kept` must match the unscaled run row for row
+    # (in BIGINT the scaled products overflow and ANSI aborts the batch)
+    import json
+
+    from skewer_spark.streaming import lm_score_stream, lm_train_model
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "lang", "text"
+    )
+    model_dir = tmp_path / "model"
+    consts = lm_train_model(spark, docs, str(model_dir), target_lang="en")
+    k = 2**62 // max(consts["fn"], consts["fs"])
+    indir = tmp_path / "docs"
+    docs.coalesce(1).write.parquet(str(indir / "f0"))
+
+    def score(tag: str) -> list[tuple]:
+        stream = spark.readStream.schema(
+            "doc_id long, lang string, text string"
+        ).parquet(str(indir / "f*"))
+        q = lm_score_stream(
+            stream, str(model_dir), str(tmp_path / tag), str(tmp_path / f"ck{tag}")
+        )
+        await_done(q, 180)
+        return sorted(
+            map(
+                tuple,
+                spark.read.parquet(str(tmp_path / tag / "scored"))
+                .select("doc_id", "score", "n_bigrams", "kept")
+                .collect(),
+            )
+        )
+
+    base = score("base")
+    (model_dir / "threshold.json").write_text(
+        json.dumps({"fn": consts["fn"] * k, "fs": consts["fs"] * k})
+    )
+    scaled = score("scaled")
+    assert max(s for _, s, _, _ in base) * consts["fn"] * k >= 2**63
+    assert scaled == base
+    assert {kept for *_, kept in base} == {True, False}
+
+
 def test_lm_train_model_refuses_empty_reference(spark, tmp_path):
     # wrong target_lang / empty input must fail at TRAIN time: frozen
     # (0, 0) constants would make the keep rule vacuously true, and
